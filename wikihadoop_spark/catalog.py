@@ -11,12 +11,11 @@ same column).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .memo import memo, session, stat_key
 from .session import configure_session
 
 TABLE_NAMES = (
@@ -37,64 +36,8 @@ TABLE_NAMES = (
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 
 
-# (path, mtime_ns, size) -> inferred StructType.  Parquet schema
-# inference reads file footers on the DRIVER on every ``read.parquet``
-# call; the catalog re-reads the same static tables on every query
-# build, so the footer cost is pure per-invocation latency (round-17).
-# The stat key invalidates the entry whenever the file is rewritten.
-_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
-
-# (context identity, path, mtime_ns, size) -> the built scan DataFrame
-# (round-18).  Even with the schema cache, every ``read.parquet`` call
-# re-creates the reader and the file index in the JVM (~30 ms per
-# table per query build — q5 loads five tables).  A DataFrame is an
-# immutable logical plan, so returning the SAME object on a repeat
-# load is plan-construction memoization in the round-17 class
-# (expression Columns, schemas, partition counts): plans, values, and
-# results are identical; every action still re-executes the full scan.
-# Keyed by the stable context identity (a restarted JVM must rebuild —
-# the plan holds gateway references) and invalidated by the stat key
-# on any file rewrite.  Regular files only, same as _SCHEMA_CACHE.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _evict_dead_context_tables(ctx: tuple) -> None:
-    for stale in [k for k in _TABLE_CACHE if k[0] != ctx]:
-        del _TABLE_CACHE[stale]
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    configure_session(spark)
-    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    key = None
-    try:
-        st = os.stat(path)
-        # REGULAR FILES ONLY (round-18 ADVICE): a directory-style
-        # dataset whose part file is rewritten in place changes neither
-        # the directory's mtime_ns nor its size, so a stat key on the
-        # directory itself would serve a stale schema (and a stale
-        # _spread partition count).  Directory datasets fall through to
-        # plain per-call inference.
-        import stat as _stat
-
-        if _stat.S_ISREG(st.st_mode):
-            key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        pass  # globs/remote paths: fall through to plain inference
-    ctx = None
-    if key is not None:
-        from ._exprs import _ctx_id
-
-        ctx = _ctx_id()
-        cached = _TABLE_CACHE.get((ctx, *key))
-        if cached is not None:
-            return cached
-    if key is not None and key in _SCHEMA_CACHE:
-        df = spark.read.schema(_SCHEMA_CACHE[key]).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        if key is not None:
-            _SCHEMA_CACHE[key] = df.schema
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
+    df = spark.read.parquet(path)
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         # int64 nanos -> timestamp_ntz micros (identical to DuckDB's value)
         # integer DIV, not `/`: float division loses precision at 1.7e18 ns
@@ -103,15 +46,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "ts",
             F.timestamp_micros(F.expr("ts DIV 1000")).cast("timestamp_ntz"),
         )
-    if key is not None:
-        # scan identity tag for relational._spread's partition-count
-        # cache (round-17): the count for the same files at the same
-        # parallelism is deterministic, so one exact probe per table
-        # replaces a plan-to-RDD conversion on every query build
-        df._wikihadoop_scan_stat = key
-        _evict_dead_context_tables(ctx)
-        _TABLE_CACHE[(ctx, *key)] = df
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The scan frame of one catalog table, memoized per session and
+    file stat (see :mod:`.memo`).  A memoized frame carries its memo
+    key as ``_memo_key`` so later plan-shape probes on the same scan
+    can be memoized under it (``relational._spread``)."""
+    configure_session(spark)
+    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    stats = stat_key([path])
+    if stats is None:
+        return _read_table(spark, path, name)
+    key = ("table", path, stats)
+
+    def build() -> DataFrame:
+        df = _read_table(spark, path, name)
+        df._memo_key = key
+        return df
+
+    return memo(session(spark), key, build)
 
 
 class Tables:

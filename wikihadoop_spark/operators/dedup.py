@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..memo import context, memo
+
 # Fixed permutation family h_i(x) = (A[i] * x + B[i]) mod M over
 # x in [0, M).  M = 2^31 - 1 keeps every product below 2^62 (no bigint
 # overflow under ANSI mode — same closed form is embedded in the oracle
@@ -143,12 +145,10 @@ def minhash_signatures_rowwise(
     """
     if n_hashes > len(MINHASH_A):
         raise ValueError(f"at most {len(MINHASH_A)} hash functions available")
-    from .._exprs import cached_exprs
-
     k = shingle_k
     toks = df.withColumn(
         "__t",
-        cached_exprs(("mh_tokens", text_col), lambda: tokens(F.col(text_col))),
+        memo(context(), ("mh_tokens", text_col), lambda: tokens(F.col(text_col))),
     ).withColumn("__lt", F.lower(F.col(text_col)))
 
     def build_hashed():
@@ -162,7 +162,7 @@ def minhash_signatures_rowwise(
         # hash each shingle once, then n cheap linear transforms over ints
         return F.transform(sh, hash31)
 
-    out = toks.withColumn("__hx", cached_exprs(("mh_hashed", k), build_hashed))
+    out = toks.withColumn("__hx", memo(context(), ("mh_hashed", k), build_hashed))
     def _perm(i: int):
         # one-arg lambda on purpose: F.transform treats a two-arg
         # function as (element, index)
@@ -170,8 +170,8 @@ def minhash_signatures_rowwise(
             F.lit(MINHASH_A[i]) * x + F.lit(MINHASH_B[i])
         ) % F.lit(MERSENNE31)
 
-    sigs = cached_exprs(
-        ("mh_sigs", n_hashes),
+    sigs = memo(
+        context(), ("mh_sigs", n_hashes),
         lambda: [
             F.array_min(F.transform(F.col("__hx"), _perm(i))).alias(f"s{i}")
             for i in range(n_hashes)
@@ -199,11 +199,9 @@ def band_key_structs(
             "remainder would silently drop signature components from "
             "every band key"
         )
-    from .._exprs import cached_exprs
-
     rows = n_hashes // bands
-    return cached_exprs(
-        ("band_key_structs", n_hashes, bands, field_prefix),
+    return memo(
+        context(), ("band_key_structs", n_hashes, bands, field_prefix),
         lambda: [
             F.struct(
                 F.lit(band).alias("band"),
@@ -269,18 +267,16 @@ def lsh_candidate_pairs(
             "the window, kept above the truncation filter) to ride the "
             "single linear plan without re-evaluating the signatures"
         )
-    from .._exprs import cached_exprs
-
-    sig_struct = cached_exprs(
-        ("lsh_sig_struct", id_col, n_hashes),
+    sig_struct = memo(
+        context(), ("lsh_sig_struct", id_col, n_hashes),
         lambda: F.struct(
             F.col(id_col).alias("id"), *[F.col(f"s{i}") for i in range(n_hashes)]
         ),
     )
     band_entries = sig.select(
         sig_struct.alias("m"),
-        cached_exprs(
-            ("lsh_band_explode", n_hashes, bands),
+        memo(
+            context(), ("lsh_band_explode", n_hashes, bands),
             lambda: F.explode(F.array(*band_key_structs(n_hashes, bands))).alias(
                 "bk"
             ),
@@ -294,8 +290,8 @@ def lsh_candidate_pairs(
         )
     ranked = band_entries.withColumn(
         "__rn",
-        cached_exprs(
-            ("lsh_rank",),
+        memo(
+            context(), ("lsh_rank",),
             lambda: F.row_number().over(
                 Window.partitionBy("bk").orderBy(F.col("m.id"))
             ),
@@ -316,8 +312,8 @@ def lsh_candidate_pairs(
     buckets = (
         kept.groupBy("bk")
         .agg(
-            cached_exprs(
-                ("lsh_members",),
+            memo(
+                context(), ("lsh_members",),
                 lambda: F.sort_array(F.collect_list("m")).alias("members"),
             )
         )
@@ -325,8 +321,8 @@ def lsh_candidate_pairs(
     )
     # all (i < j) member pairs, ids already ascending via sort_array
     pairs = buckets.select(
-        cached_exprs(
-            ("lsh_pair_explode",),
+        memo(
+            context(), ("lsh_pair_explode",),
             lambda: F.explode(
                 F.flatten(
                     F.transform(
@@ -357,7 +353,7 @@ def lsh_candidate_pairs(
         ]
 
     return (
-        pairs.select(*cached_exprs(("lsh_pair_out", n_hashes), build_out))
+        pairs.select(*memo(context(), ("lsh_pair_out", n_hashes), build_out))
         .dropDuplicates(["id_a", "id_b"])
     )
 
@@ -476,10 +472,8 @@ def capped_block_pairs(
         # contain this node, but their map-side subtrees stay identical
         # so exchange reuse evaluates it once (pinned in test_plans.py)
         df = observation._observe_total(df, counter)
-    from .._exprs import cached_exprs
-
-    rank_col = cached_exprs(
-        ("block_rank", tuple(block_cols), id_col),
+    rank_col = memo(
+        context(), ("block_rank", tuple(block_cols), id_col),
         lambda: F.row_number().over(
             Window.partitionBy(*block_cols).orderBy(id_col)
         ),

@@ -51,6 +51,8 @@ import re as _re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..memo import context, memo, stat_key
+
 
 def quantize_int8(vec: Column) -> Column:
     """array<double> -> array<int> in [-127, 127] (symmetric per-vector
@@ -89,31 +91,23 @@ def quantized_cosine(dot_col: Column, n2a: Column, n2b: Column) -> Column:
 # lambda registration per build and are rebuilt identically on every
 # query invocation.  Unresolved immutable ASTs; plans unchanged.
 def _quantize_col(name: str) -> Column:
-    from .._exprs import cached_exprs
-
-    return cached_exprs(
-        ("int8_quantize", name),
+    return memo(
+        context(), ("int8_quantize", name),
         lambda: quantize_int8(F.col(name).cast("array<double>")),
     )
 
 
 def _int_norm2_col(name: str) -> Column:
-    from .._exprs import cached_exprs
-
-    return cached_exprs(("int8_norm2", name), lambda: int_norm2(F.col(name)))
+    return memo(context(), ("int8_norm2", name), lambda: int_norm2(F.col(name)))
 
 
 def _int_dot_cols(a: str, b: str) -> Column:
-    from .._exprs import cached_exprs
-
-    return cached_exprs(("int8_dot", a, b), lambda: int_dot(F.col(a), F.col(b)))
+    return memo(context(), ("int8_dot", a, b), lambda: int_dot(F.col(a), F.col(b)))
 
 
 def _qcos_cols(dot_name: str, na: str, nb: str) -> Column:
-    from .._exprs import cached_exprs
-
-    return cached_exprs(
-        ("int8_qcos", dot_name, na, nb),
+    return memo(
+        context(), ("int8_qcos", dot_name, na, nb),
         lambda: quantized_cosine(F.col(dot_name), F.col(na), F.col(nb)),
     )
 
@@ -121,10 +115,8 @@ def _qcos_cols(dot_name: str, na: str, nb: str) -> Column:
 def _int8_rank_window(part: str, order_desc: str, tiebreak: str) -> Column:
     from pyspark.sql import Window
 
-    from .._exprs import cached_exprs
-
-    return cached_exprs(
-        ("int8_rank", part, order_desc, tiebreak),
+    return memo(
+        context(), ("int8_rank", part, order_desc, tiebreak),
         lambda: F.row_number().over(
             Window.partitionBy(part).orderBy(
                 F.col(order_desc).desc(), tiebreak
@@ -150,10 +142,8 @@ def hyperplane_bucket_int(qvec: Column, planes: list[list[int]]) -> Column:
 
     The built Column is memoized per (planes, vec expression): the
     plane literals alone are |planes|×d py4j calls of pure driver
-    build latency re-paid per query build (round-17; see
-    wikihadoop_spark._exprs)."""
-    from .._exprs import cached_exprs
-
+    build latency re-paid per query build (see
+    :mod:`wikihadoop_spark.memo`)."""
     def build() -> Column:
         bucket = F.lit(0)
         for i, p in enumerate(planes):
@@ -162,9 +152,8 @@ def hyperplane_bucket_int(qvec: Column, planes: list[list[int]]) -> Column:
             bucket = bucket + bit * F.lit(2 ** i)
         return bucket
 
-    return cached_exprs(
-        ("hyperplane_bucket_int", tuple(map(tuple, planes)), str(qvec)), build
-    )
+    key = ("hyperplane_bucket_int", tuple(map(tuple, planes)), str(qvec))
+    return memo(context(), key, build)
 
 
 def cosine_topk_int8_lsh(
@@ -988,43 +977,15 @@ def ivf_write_int8(
         shutil.rmtree(prev_target, ignore_errors=True)
 
 
-# (realpath, centroids-file stat listing) -> K×D centroid ints
-# (round-18, verdict item 5): the centroids are a tiny one-file parquet
-# whose ``collect`` is a full driver job paid on EVERY search
-# invocation (~0.1-0.2 s of pure latency at bench scale; one cluster
-# round trip at real scale).  The values are plain Python ints — no
-# JVM handles, so no SparkContext key is needed — and the stat listing
-# (name, size, mtime_ns per file under ``centroids/``) invalidates the
-# entry whenever the artifact is rebuilt (a rebuild lands under a new
-# fingerprint path or re-points the published symlink, changing the
-# realpath; an in-place rewrite changes the listing).  The read-path
-# ``os.utime`` touches only the index ROOT, never ``centroids/``, so
-# hot reads do not churn the key.  Mirrors catalog._SCHEMA_CACHE.
-_CENTROID_CACHE: dict[tuple, list[list[int]]] = {}
-_CENTROID_CACHE_MAX = 32
-
-
-def _centroid_cache_key(path: str) -> tuple | None:
-    import os
-
-    cdir = os.path.join(os.path.realpath(path), "centroids")
-    try:
-        listing = tuple(
-            (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-            for e in sorted(os.scandir(cdir), key=lambda x: x.name)
-            if e.is_file()
-        )
-    except OSError:
-        return None
-    return (os.path.realpath(path), listing)
-
-
 def ivf_read_int8(spark, path: str) -> tuple[DataFrame, list[list[int]]]:
     """Read back an index written by ivf_write_int8: (tagged frame,
     centroid list).  The frame is a plain parquet scan — filters and
-    column pruning push down; the centroids are K×D driver ints
-    (stat-cached per artifact — see ``_CENTROID_CACHE``; a fresh copy
-    is returned so callers can never mutate the cached lists).
+    column pruning push down; the centroids are K×D driver ints,
+    memoized per artifact on the realpath and the stat of every file
+    under ``centroids/`` (a rebuild lands under a new fingerprint path or
+    re-points the published symlink; an in-place rewrite changes the
+    stats).  A fresh copy is returned so callers can never mutate the
+    memoized lists.
 
     A successful read refreshes the published entry's OWN (lstat)
     mtime — the handle the age sweep in :func:`_cleanup_stale_indexes`
@@ -1042,19 +1003,25 @@ def ivf_read_int8(spark, path: str) -> tuple[DataFrame, list[list[int]]]:
     import os
 
     tagged = spark.read.parquet(os.path.join(path, "vectors"))
-    ckey = _centroid_cache_key(path)
-    cached = _CENTROID_CACHE.get(ckey) if ckey is not None else None
-    if cached is not None:
-        cents = [list(c) for c in cached]
-    else:
-        rows = spark.read.parquet(os.path.join(path, "centroids")).collect()
-        cents = [
+    cdir = os.path.join(path, "centroids")
+
+    def read_centroids() -> list[list[int]]:
+        rows = spark.read.parquet(cdir).collect()
+        return [
             list(r["centroid"]) for r in sorted(rows, key=lambda r: r["cluster"])
         ]
-        if ckey is not None:
-            if len(_CENTROID_CACHE) >= _CENTROID_CACHE_MAX:
-                _CENTROID_CACHE.clear()  # tiny values; simplest bound
-            _CENTROID_CACHE[ckey] = [list(c) for c in cents]
+
+    real = os.path.realpath(cdir)
+    try:
+        names = tuple(sorted(os.listdir(real)))
+    except OSError:
+        names = ()
+    stats = stat_key(os.path.join(real, n) for n in names) if names else None
+    if stats is None:
+        cents = read_centroids()
+    else:
+        cents = memo(None, ("ivf_centroids", real, names, stats), read_centroids)
+    cents = [list(c) for c in cents]
     try:
         os.utime(path, follow_symlinks=False)
         # the symlink's .data target ages independently (round-15
@@ -1563,8 +1530,6 @@ def _assign_int(c: DataFrame, centroids: list[list[int]]) -> DataFrame:
     (round-18): the integer Lloyd sequence is deterministic for a given
     corpus, so repeat invocations rebuild identical expressions — only
     the Column construction caches, every assignment job still runs."""
-    from .._exprs import cached_exprs
-
     def _build() -> Column:
         dists = F.array(
             *[
@@ -1578,8 +1543,8 @@ def _assign_int(c: DataFrame, centroids: list[list[int]]) -> DataFrame:
 
     return c.withColumn(
         "__cl",
-        cached_exprs(
-            ("int8_assign", tuple(map(tuple, centroids)), "__q"), _build
+        memo(
+            context(), ("int8_assign", tuple(map(tuple, centroids)), "__q"), _build
         ),
     )
 
@@ -1610,8 +1575,6 @@ def nprobe_clusters(
     Only a PRESENT, mis-dimensioned vector is a loud error."""
     if not centroids:
         raise ValueError("nprobe_clusters: empty centroid list")
-    from .._exprs import cached_exprs
-
     def _build() -> Column:
         dim = len(centroids[0])
         was_null = qvec.isNull()
@@ -1653,8 +1616,8 @@ def nprobe_clusters(
     # memoized per (probe expression, centroid VALUES, nprobe) — the
     # K×D centroid literals dominate the build cost (round-18); the
     # str(qvec) key component is one py4j toString round trip
-    return cached_exprs(
-        ("int8_nprobe", str(qvec), tuple(map(tuple, centroids)), nprobe),
+    return memo(
+        context(), ("int8_nprobe", str(qvec), tuple(map(tuple, centroids)), nprobe),
         _build,
     )
 
@@ -1783,10 +1746,8 @@ def multiprobe_pairs_int8(
             b, block_cols=["bkt"], id_col="vec_id",
             payload_cols=["q", "n2"], cap=cap,
         )
-        from .._exprs import cached_exprs as _ce
-
-        qcos = _ce(
-            ("int8_pair_qcos", "q_a", "q_b", "n2_a", "n2_b"),
+        qcos = memo(
+            context(), ("int8_pair_qcos", "q_a", "q_b", "n2_a", "n2_b"),
             lambda: quantized_cosine(
                 _int_dot_cols("q_a", "q_b"), F.col("n2_a"), F.col("n2_b")
             ),

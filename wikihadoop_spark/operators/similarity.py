@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .._exprs import cached_exprs
+from ..memo import context, memo
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -45,23 +45,23 @@ def cosine(a: Column, b: Column) -> Column:
 # columns on every query invocation.  Same class as the round-17
 # operator memoizations — unresolved immutable ASTs, identical plans.
 def _norm_col(name: str) -> Column:
-    return cached_exprs(("sim_norm", name), lambda: norm(F.col(name)))
+    return memo(context(), ("sim_norm", name), lambda: norm(F.col(name)))
 
 
 def _dot_cols(a: str, b: str) -> Column:
-    return cached_exprs(("sim_dot", a, b), lambda: dot(F.col(a), F.col(b)))
+    return memo(context(), ("sim_dot", a, b), lambda: dot(F.col(a), F.col(b)))
 
 
 def _pair_sim(va: str, vb: str, na: str, nb: str) -> Column:
-    return cached_exprs(
-        ("sim_pair", va, vb, na, nb),
+    return memo(
+        context(), ("sim_pair", va, vb, na, nb),
         lambda: _dot_cols(va, vb) / (F.col(na) * F.col(nb)),
     )
 
 
 def _rank_window(part: str, order_desc: str, tiebreak: str):
-    return cached_exprs(
-        ("sim_rank", part, order_desc, tiebreak),
+    return memo(
+        context(), ("sim_rank", part, order_desc, tiebreak),
         lambda: F.row_number().over(
             Window.partitionBy(part).orderBy(
                 F.col(order_desc).desc(), F.col(tiebreak)
@@ -124,9 +124,7 @@ def hyperplane_bucket(vec: Column, planes: list[list[float]]) -> Column:
     The built Column is memoized per (planes, vec expression): the
     plane literals alone are |planes|×d py4j calls (~0.2 s per build
     for 8×64), pure driver latency re-paid on every query build
-    (round-17; see wikihadoop_spark._exprs)."""
-    from .._exprs import cached_exprs
-
+    (see :mod:`wikihadoop_spark.memo`)."""
     def build() -> Column:
         bucket = F.lit(0)
         for i, p in enumerate(planes):
@@ -135,9 +133,8 @@ def hyperplane_bucket(vec: Column, planes: list[list[float]]) -> Column:
             bucket = bucket + bit * F.lit(2**i)
         return bucket
 
-    return cached_exprs(
-        ("hyperplane_bucket", tuple(map(tuple, planes)), str(vec)), build
-    )
+    key = ("hyperplane_bucket", tuple(map(tuple, planes)), str(vec))
+    return memo(context(), key, build)
 
 
 def cosine_topk_lsh(
@@ -178,8 +175,8 @@ def cosine_topk_lsh(
     )
     sim = _pair_sim("__qvec", "__cvec", "__qnorm", "__cnorm")
     if round_dp is not None:
-        sim = cached_exprs(
-            ("sim_pair_round", "__qvec", "__cvec", "__qnorm", "__cnorm",
+        sim = memo(
+            context(), ("sim_pair_round", "__qvec", "__cvec", "__qnorm", "__cnorm",
              round_dp),
             lambda: F.round(sim, round_dp),
         )
@@ -236,8 +233,8 @@ def multiprobe_pairs(
             b, block_cols=["bkt"], id_col="vec_id", payload_cols=["e", "__n"],
             cap=cap,
         )
-        sim = cached_exprs(
-            ("sim_pair_round", "e_a", "e_b", "__n_a", "__n_b", round_dp),
+        sim = memo(
+            context(), ("sim_pair_round", "e_a", "e_b", "__n_a", "__n_b", round_dp),
             lambda: F.round(
                 _pair_sim("e_a", "e_b", "__n_a", "__n_b"), round_dp
             ),
@@ -341,11 +338,9 @@ def _assign(c: DataFrame, centroids: list[list[float]]) -> DataFrame:
         )
         return F.array_position(dists, F.array_min(dists)).cast("int") - 1
 
-    from .._exprs import cached_exprs as _ce
-
     return c.withColumn(
         "__cluster",
-        _ce(("ivf_assign", tuple(map(tuple, centroids)), "__v"), _build),
+        memo(context(), ("ivf_assign", tuple(map(tuple, centroids)), "__v"), _build),
     )
 
 
@@ -395,8 +390,8 @@ def cosine_topk_ivf(
             F.transform(F.slice(idx, 1, nprobe), lambda s: s["i"])
         )
 
-    probe = cached_exprs(
-        ("ivf_probe", tuple(map(tuple, centroids)), nprobe, "__qv"),
+    probe = memo(
+        context(), ("ivf_probe", tuple(map(tuple, centroids)), nprobe, "__qv"),
         _build_probe,
     )
     q = q.withColumn("cluster", probe).withColumn("__qn", _norm_col("__qv"))
@@ -409,8 +404,8 @@ def cosine_topk_ivf(
     # expression over the same array — bit-identical values
     sim = _pair_sim("__qv", "__cv", "__qn", "__cn")
     if round_dp is not None:
-        sim = cached_exprs(
-            ("sim_pair_round", "__qv", "__cv", "__qn", "__cn", round_dp),
+        sim = memo(
+            context(), ("sim_pair_round", "__qv", "__cv", "__qn", "__cn", round_dp),
             lambda: F.round(sim, round_dp),
         )
     scored = (

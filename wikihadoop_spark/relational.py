@@ -31,12 +31,15 @@ Engine-parity conventions (why the code looks the way it does):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import Tables
+from .catalog import TABLE_NAMES, Tables
+from .memo import context, memo, session, stat_key
 from .operators.asof import asof_join
 from .operators.dedup import (
     MERSENNE31,
@@ -50,72 +53,29 @@ from .operators.dedup import (
 from .operators.sessionize import sessionize
 from .operators.similarity import cosine_topk
 from .operators.topk import top_k_per_group
+from .session import configure_session
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
-# (table stat key, defaultParallelism) -> scan partition count; see
-# _spread (round-17: one exact probe per table instead of per build)
-_SCAN_PARTS_CACHE: dict[tuple, int] = {}
 
-# ---- prepared-plan memo (round-18) ----------------------------------------
-#
-# The terminal form of the round-17/18 plan-construction memoization
-# class (expression Columns -> schemas -> table scan DataFrames ->
-# whole query plans): for a query whose build is PURE PLAN ASSEMBLY,
-# the returned DataFrame is an immutable logical plan over the catalog
-# tables, fully determined by (query name, sf_dir contents), so a
-# repeat invocation can return the SAME object — a prepared-statement
-# cache, exactly like plan caches in server databases.  Every ACTION
-# on the frame still executes the full job from the parquet inputs:
-# nothing row- or result-shaped is stored, and plans/values are
-# byte-identical to a fresh build.
-#
-# Eligibility is deliberately narrow and machine-verified
-# (tests/test_prepared_plans.py drills every name): a query is in
-# `_PURE_PLAN_QUERIES` only if, with warm table schemas, its build
-# (a) runs ZERO Spark jobs — memoizing a build that trains/iterates
-#     (IVF k-means, connected components, pack boundaries, Bloom
-#     builds) would skip real recomputation, which is result caching;
-# (b) leaves NO persisted relation in the optimized plan — a memoized
-#     frame marked for caching would serve CacheManager data across
-#     invocations (the round-17 verdict's unpersist-discipline trap);
-# (c) scans ONLY the ten catalog tables under sf_dir — the memo key's
-#     stat tuple must cover every input that could change.
-# The key carries the stable context identity (a restarted JVM must
-# rebuild: plans hold gateway references) and the (mtime_ns, size)
-# stat of every catalog table, so any rewrite of the inputs
-# invalidates the entry; non-regular / missing table files disable
-# the memo entirely for that sf_dir.
-_PREPARED_CACHE: dict[tuple, DataFrame] = {}
+def _rewrap(spark: SparkSession, cached: DataFrame) -> DataFrame | None:
+    """``cached``'s logical plan under a fresh Dataset of ``spark``, or
+    None when this JVM or client has no classic ``Dataset.ofRows``.
 
-
-def _prepared_key(sf_dir: str, name: str) -> tuple | None:
-    import os as _os
-    import stat as _stat
-
-    from .catalog import TABLE_NAMES
-
-    sfd = _os.path.realpath(sf_dir)
-    stats = []
+    A Dataset pins its QueryExecution at first use, so handing back the
+    cached Dataset itself would freeze conf-dependent physical choices
+    (shuffle partitions, AQE, broadcast thresholds) at the first
+    caller's conf; the fresh Dataset is planned under the current one."""
     try:
-        for t in TABLE_NAMES:
-            st = _os.stat(_os.path.join(sfd, f"{t}.parquet"))
-            if not _stat.S_ISREG(st.st_mode):
-                return None
-            stats.append((st.st_mtime_ns, st.st_size))
-    except OSError:
+        jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, cached._jdf.queryExecution().logical()
+        )
+    except (AttributeError, TypeError, Py4JError):
         return None
-    from ._exprs import _ctx_id
-
-    return (_ctx_id(), name, sfd, tuple(stats))
-
-
-def _evict_dead_context_prepared(ctx: tuple) -> None:
-    for stale in [k for k in _PREPARED_CACHE if k[0] != ctx]:
-        del _PREPARED_CACHE[stale]
+    return DataFrame(jdf, spark)
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -125,35 +85,26 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
             @functools.wraps(fn)
             def prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
-                key = _prepared_key(sf_dir, name)
-                if key is None:
+                sfd = os.path.realpath(sf_dir)
+                stats = stat_key(
+                    os.path.join(sfd, f"{t}.parquet") for t in TABLE_NAMES
+                )
+                if stats is None:
                     return fn(spark, sf_dir)
-                cached = _PREPARED_CACHE.get(key)
-                if cached is None:
-                    cached = fn(spark, sf_dir)
-                    _evict_dead_context_prepared(key[0])
-                    _PREPARED_CACHE[key] = cached
-                    return cached
+                fresh = []
+
+                def build() -> DataFrame:
+                    fresh.append(fn(spark, sf_dir))
+                    return fresh[0]
+
+                cached = memo(session(spark), ("prepared", name, sfd, stats), build)
+                if fresh:
+                    return fresh[0]
                 # keep the configure_session contract (UTC re-assert)
                 # that a fresh build would have run
-                from .session import configure_session
-
                 configure_session(spark)
-                # Hand back the memoized LOGICAL plan under a FRESH
-                # Dataset (ofRows): a Dataset pins its QueryExecution —
-                # analysis/optimization/physical planning — at first
-                # use, so returning the cached Dataset itself would
-                # freeze conf-dependent physical choices (shuffle
-                # partitions, AQE, broadcast thresholds) at whatever
-                # the session looked like on the FIRST invocation.
-                # Re-wrapping replans against the CALLER's current
-                # session every time; only the py4j plan-assembly
-                # chain (the expensive part) is amortized.
-                jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-                    spark._jsparkSession,
-                    cached._jdf.queryExecution().logical(),
-                )
-                return DataFrame(jdf, spark)
+                df = _rewrap(spark, cached)
+                return fn(spark, sf_dir) if df is None else df
 
             QUERIES[name] = prepared
         else:
@@ -165,25 +116,29 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# Machine-verified membership (see the drill in
-# tests/test_prepared_plans.py, which rejects any name that runs a
-# build job, persists, or scans outside the catalog tables — and any
-# NEW query added here without passing that drill).  Notable
-# exclusions and why: the IVF family (training/artifact jobs),
-# dedup_clusters / semantic_dedup / dedup_keeper_quality /
-# dedup_verify_pairs / text_lm_buckets / curate_pipeline (connected
-# components or other convergence jobs during build),
-# similarity_topk_int8{,_lsh} / text_lm_{surprisal,bigram} /
-# dsir_weights / embedding_cosine_dedup_int8 (persisted model or
-# corpus frames), pack_token_budget / shuffle_pack / mixture_waterfill
-# / sample_mixture (range-boundary or budget scans), decontaminate_bloom
+# Queries whose build is pure plan assembly, so a repeat call may
+# re-wrap the memoized logical plan (see ``query``).  The drill in
+# tests/test_prepared_plans.py checks every name: with warm tables the
+# build (a) runs no Spark job, (b) leaves no persisted relation in the
+# optimized plan, (c) scans only the catalog tables under sf_dir, whose
+# stats are in the memo key, and (d) holds no UnresolvedRelation, which
+# would resolve at re-analysis against whichever sf dir last registered
+# the temp view.  Notable exclusions and why: the IVF family
+# (training/artifact jobs), dedup_clusters / semantic_dedup /
+# dedup_keeper_quality / dedup_verify_pairs / text_lm_buckets /
+# curate_pipeline (connected components or other convergence jobs during
+# build), similarity_topk_int8{,_lsh} / text_lm_{surprisal,bigram} /
+# dsir_weights / embedding_cosine_dedup_int8 (persisted model or corpus
+# frames), pack_token_budget / shuffle_pack / mixture_waterfill /
+# sample_mixture (range-boundary or budget scans), decontaminate_bloom
 # (Bloom build), ngram_overlap (localCheckpoint), jsonl_* (reads
-# regenerated /tmp shard fixtures).
+# regenerated /tmp shard fixtures), agg_grouping_sets / scalar_subquery
+# / correlated_exists (SQL over temp views).
 _PURE_PLAN_QUERIES: frozenset[str] = frozenset({
     "agg_approx_distinct", "agg_argmax", "agg_cube", "agg_distinct",
-    "agg_grouping_sets", "agg_percentile", "agg_rollup", "agg_stats",
+    "agg_percentile", "agg_rollup", "agg_stats",
     "asof_join_events_orders", "chunk_documents", "corpus_delta",
-    "corpus_report_card", "correlated_exists", "decontaminate_exact",
+    "corpus_report_card", "decontaminate_exact",
     "decontaminate_ngram", "decontaminate_report", "dedup_exact_rows",
     "dedup_line_frequency", "dedup_span_audit", "dedup_span_exact",
     "embedding_cosine_dedup", "events_funnel", "events_funnel_skewsafe",
@@ -196,7 +151,7 @@ _PURE_PLAN_QUERIES: frozenset[str] = frozenset({
     "q3_top_revenue", "q5_revenue_by_nation", "range_join_near_orders",
     "sample_stratified", "scalar_array", "scalar_conditional",
     "scalar_date", "scalar_hash", "scalar_json", "scalar_math",
-    "scalar_string", "scalar_subquery", "scan_filter_project",
+    "scalar_string", "scan_filter_project",
     "sessionize_events", "set_except", "set_intersect", "set_union_all",
     "simhash_near_pairs", "simhash_signatures", "similarity_topk",
     "similarity_topk_lsh", "sketch_count_min", "sort_topk_global",
@@ -228,23 +183,20 @@ def _spread(df: DataFrame) -> DataFrame:
     SLOWER (32-way task scheduling overhead exceeds their ~0.3 s of
     serial work), so the light text queries deliberately don't use
     it."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    # `df.rdd.getNumPartitions()` forces a plan-to-RDD conversion —
-    # pure driver latency paid on EVERY query build.  Every _spread
-    # call site passes a raw catalog-table scan, whose partition count
-    # is deterministic for (files, parallelism): probe it exactly once
-    # and cache on the stat key `load_table` tagged (round-17); any
-    # untagged frame keeps the exact per-call probe.
-    skey = getattr(df, "_wikihadoop_scan_stat", None)
-    if skey is not None:
-        ckey = (skey, target)
-        nparts = _SCAN_PARTS_CACHE.get(ckey)
-        if nparts is None:
-            nparts = df.rdd.getNumPartitions()
-            _SCAN_PARTS_CACHE[ckey] = nparts
-    else:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    # `df.rdd.getNumPartitions()` converts the plan to an RDD, driver
+    # latency on every build; for a memoized catalog scan the count is
+    # fixed by (files, parallelism), so it is memoized under the scan's
+    # own memo key
+    key = getattr(df, "_memo_key", None)
+    if key is None:
         nparts = df.rdd.getNumPartitions()
+    else:
+        nparts = memo(
+            session(df.sparkSession),
+            (*key, "scan_parts", target),
+            lambda: df.rdd.getNumPartitions(),
+        )
     if nparts < max(2, target // 2):
         return df.repartition(target)
     return df
@@ -253,35 +205,25 @@ def _spread(df: DataFrame) -> DataFrame:
 # ---- decimal-cast helpers (see module docstring) --------------------------
 
 
-# memoized via cached_exprs (round-18): these helpers run inside the
-# hottest aggregate builds (q1 alone calls them ~10x per build) and
-# each Column construction is 2-3 py4j round trips; the returned
-# unresolved ASTs are immutable and reused across plans exactly like
-# the round-17 operator memoizations — plans and results unchanged.
-from ._exprs import cached_exprs as _cached_exprs  # noqa: E402
-
-
+# Memoized: the hottest aggregate builds call these many times per
+# build, and each Column construction is 2-3 py4j round trips.
 def dec2(c: str) -> Column:
-    return _cached_exprs(
-        ("dec2", c), lambda: F.col(c).cast("decimal(15,2)")
-    )
+    return memo(context(), ("dec2", c), lambda: F.col(c).cast("decimal(15,2)"))
 
 
 def pct2(c: str) -> Column:
     """discount/tax-style small ratios."""
-    return _cached_exprs(
-        ("pct2", c), lambda: F.col(c).cast("decimal(9,2)")
-    )
+    return memo(context(), ("pct2", c), lambda: F.col(c).cast("decimal(9,2)"))
 
 
 def ONE() -> Column:
     # built lazily: Column construction needs an active SparkContext
-    return _cached_exprs(("dec_one",), lambda: F.lit(1).cast("decimal(9,2)"))
+    return memo(context(), ("dec_one",), lambda: F.lit(1).cast("decimal(9,2)"))
 
 
 def disc_price() -> Column:
-    return _cached_exprs(
-        ("disc_price",),
+    return memo(
+        context(), ("disc_price",),
         lambda: dec2("l_extendedprice") * (ONE() - pct2("l_discount")),
     )
 
@@ -3892,8 +3834,8 @@ def similarity_topk(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn(
             "cosine_sim",
-            _cached_exprs(
-                ("sim_pair_round", "qv", "cv", "qn", "cn", 9),
+            memo(
+                context(), ("sim_pair_round", "qv", "cv", "qn", "cn", 9),
                 lambda: F.round(_pair_sim("qv", "cv", "qn", "cn"), 9),
             ),
         )
@@ -5206,8 +5148,8 @@ def embedding_cosine_dedup(spark: SparkSession, sf: str) -> DataFrame:
         payload_cols=["e", "__n"],
         cap=1000,
     )
-    sim = _cached_exprs(
-        ("sim_pair_round", "e_a", "e_b", "__n_a", "__n_b", 9),
+    sim = memo(
+        context(), ("sim_pair_round", "e_a", "e_b", "__n_a", "__n_b", 9),
         lambda: F.round(_pair_sim("e_a", "e_b", "__n_a", "__n_b"), 9),
     )
     return (

@@ -163,6 +163,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # Every stage broadcasts its task binary, and a broadcast piece
+        # is allocated at the full block size however small the payload.
+        # A 4 MiB piece is a humongous G1 allocation in the driver JVM,
+        # so the default size starts a young GC burst per few stages and
+        # lets the heap jump by hundreds of MB at random points in a
+        # long-lived driver.  512 KiB stays below the humongous threshold
+        # for driver heaps above 2 GiB (2 MiB regions and up).
+        .config("spark.broadcast.blockSize", "512k")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
